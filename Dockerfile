@@ -40,7 +40,7 @@ RUN sbt -batch package
 FROM builder AS test
 RUN sbt -batch "testOnly graft.ark.* graft.functions.* \
   graft.ops.BloomSpec graft.ops.PropertySpec \
-  graft.ops.StageSwapSpec \
+  graft.ops.UpdateMarkerSpec \
   graft.streaming.EventStreamSpec"
 
 FROM ${SPARK_IMAGE} AS main

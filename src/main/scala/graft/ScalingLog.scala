@@ -36,8 +36,8 @@ object ScalingLog {
     * listener's counters cover exactly the measured run. Returns
     * (result, seconds); each generator formats its own tier-specific
     * JSON fields from the listener. Consolidated for the same reason
-    * as UpdateMarker.settle: a fix to the flush ordering must not
-    * have five copies to miss.
+    * as the UpdateMarker writer lifecycle: a fix to the flush
+    * ordering must not have five copies to miss.
     *
     * Generators whose run has SIDE EFFECTS (IncrementalScaling's
     * store updates, RewriteScaling's conf-flipped arms) pass

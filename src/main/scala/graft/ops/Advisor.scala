@@ -102,8 +102,7 @@ object Advisor {
     * ceiling, outstanding label-delta bytes vs its guard. */
   def adviseCuration(s: SparkSession,
       store: CurationStore.Store): DataFrame = {
-    val tombMax = conf(s, CurationStore.TombBroadcastMaxBytes,
-      32.0 * 1024 * 1024)
+    val tombMax = Tombstones.broadcastMaxBytes(s).toDouble
     val deltaMax = conf(s, CurationStore.DeltaBroadcastMaxBytes,
       32.0 * 1024 * 1024)
     val tomb = dirBytes(s, store.tombDir(s))
@@ -121,8 +120,7 @@ object Advisor {
     * compaction cannot help a stale model, only a re-train can). */
   def adviseAnn(s: SparkSession, idx: AnnIndexStore.Index): DataFrame = {
     val snap = idx.pin(s)
-    val tombMax = conf(s, AnnIndexStore.TombBroadcastMaxBytes,
-      32.0 * 1024 * 1024)
+    val tombMax = Tombstones.broadcastMaxBytes(s).toDouble
     val tomb = dirBytes(s, snap.tombsPath)
     val fpcMax = conf(s, CodesFilesPerCellMax, codesFilesPerCellDefault)
     val fs = new Path(idx.dir)
@@ -163,8 +161,7 @@ object Advisor {
     * delta vs the advisor's guard. */
   def adviseText(s: SparkSession, idx: TextIndexStore.Index): DataFrame = {
     val snap = idx.pin(s)
-    val tombMax = conf(s, TextIndexStore.TombBroadcastMaxBytes,
-      32.0 * 1024 * 1024)
+    val tombMax = Tombstones.broadcastMaxBytes(s).toDouble
     val tomb = dirBytes(s, snap.tombsPath)
     val deltaMax = conf(s, TextDeltaMaxBytes, textDeltaDefault.toDouble)
     val delta = dirBytes(s, snap.deltaPath)

@@ -67,9 +67,9 @@ import org.apache.spark.sql.functions._
   * the exact live-row counter landed: appends go INSIDE the current
   * codes/tombstone versions, and the one-row `stats` stage (the live
   * vector count, folded additively) flips to its next version as THE
-  * commit — giving [[UpdateMarker.settle]]'s listing-diff rule a
+  * commit — giving [[UpdateMarker.enter]]'s listing-diff rule a
   * commit witness the bare append never had (the codes table is
-  * partitioned, so its listings are recursive — settle's
+  * partitioned, so its listings are recursive — the entry's
   * `recursiveStages`). A crash before the flip heals the partial
   * appends at the next entry; after it, the batch is committed with
   * its counter already exact, and a `batchId` makes the
@@ -134,7 +134,7 @@ object AnnIndexStore {
     /** The LIVE encoded corpus: the partitioned codes table minus
       * tombstoned ids ([[AnnIndexStore.delete]] — broadcast
       * anti-join while the tombstone set is small, shuffle past the
-      * [[AnnIndexStore.TombBroadcastMaxBytes]] ceiling; the
+      * [[Tombstones.BroadcastMaxBytes]] ceiling; the
       * partition-pruning predicates still bind, because the mask is
       * a join above the pruned scan). Every consumer — [[search]],
       * the hybrid fusions, the scaling probes — reads through here,
@@ -149,9 +149,7 @@ object AnnIndexStore {
           .parquet(files.map(_._1): _*)
         case None => s.read.parquet(codesPath)
       }
-      Tombstones.mask(s, raw, idCol, tombSrc,
-        AnnIndexStore.TombBroadcastMaxBytes,
-        AnnIndexStore.tombBroadcastDefault, Seq(idCol))
+      Tombstones.mask(s, raw, idCol, tombSrc, Seq(idCol))
     }
   }
 
@@ -204,18 +202,6 @@ object AnnIndexStore {
     def codes(s: SparkSession): DataFrame = pin(s).codes(s)
   }
 
-  /** Ceiling (bytes of tombstone parquet) up to which the deleted-id
-    * mask rides reads as a BROADCAST; past it the mask degrades to a
-    * shuffle anti-join instead of OOMing. Hitting it means
-    * [[compact]] is overdue. */
-  val TombBroadcastMaxBytes = "spark.graft.ann.tombBroadcastMaxBytes"
-  private[ops] val tombBroadcastDefault = 32L * 1024 * 1024
-
-  private[ops] def tombBroadcastable(s: SparkSession,
-      idx: Index): Boolean =
-    Tombstones.broadcastable(s, idx.tombDir(s), TombBroadcastMaxBytes,
-      tombBroadcastDefault)
-
   /** Ceiling on the DISTINCT probed cells [[search]] will collect to
     * the driver for static partition pruning. The probe list is
     * bounded by the query batch (≤ one cell per query), so the
@@ -241,25 +227,12 @@ object AnnIndexStore {
       iters: Int): Index = {
     val s = emb.sparkSession
     val fs = fsOf(s, dir)
-    // settle the directory's previous life. A VERSIONED previous
-    // life keeps its committed snapshot (that is the serve-through-
-    // rebuild contract) and only sheds crashed writers' orphan
-    // version dirs; a PRE-VERSIONING or foreign layout (stage data
-    // directly at the stage roots) is reset wholesale — its files
-    // would alias version resolution. Stale markers/_applied go
-    // either way: a rebuild resets batch-id lineage (streaming
-    // epochs restart at 0), and a crashed add's marker would "heal"
-    // fresh files against a stale snapshot.
-    if (StoreVersions.read(fs, dir).isEmpty)
-      for (st <- Stages ++ Seq("codes.next", "codes.old"))
-        StageSwap.remove(fs, new Path(s"$dir/$st"))
-    else StoreVersions.sweepOrphans(fs, dir, Stages)
-    UpdateMarker.clear(fs, dir)
+    UpdateMarker.enterBuild(fs, dir, Stages)
     // the recall log too: its rows are probes of the PREVIOUS life's
     // corpus/models — surviving a rebuild they would pollute the
     // staleness history the operational loop reads (a post-rebuild
     // trend would start from the stale corpus's decayed recall)
-    StageSwap.remove(fs, new Path(s"$dir/recall_log"))
+    UpdateMarker.remove(fs, new Path(s"$dir/recall_log"))
     // The two trainers are INDEPENDENT — the coarse quantizer is a
     // filtered projection of the corpus, the PQ Lloyd loop reads the
     // corpus through its own seed — so they run CONCURRENTLY
@@ -372,7 +345,7 @@ object AnnIndexStore {
   private[ops] def fsOf(s: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(s.sessionState.newHadoopConf())
 
-  /** The [[UpdateMarker.settle]] stage map for this store's writers,
+  /** The [[UpdateMarker.enter]] stage map for this store's writers,
     * resolved to the CURRENT versions. `stats` is the flip-commit
     * stage (its one-row counter version flips at every add/delete —
     * the [[TextIndexStore]] protocol, which this store adopted when
@@ -380,7 +353,7 @@ object AnnIndexStore {
     * the bare append never had); `codes`/`tombs` are the append-only
     * sides healed on a pre-commit crash. `codes` is PARTITIONED, so
     * its listings are recursive ([[UpdateMarker.listFilesRecursive]]
-    * via settle's `recursiveStages`).
+    * via [[Recursive]]).
     */
   private def stageMap(s: SparkSession, idx: Index): Map[String, String] = {
     val snap = idx.pin(s)
@@ -388,21 +361,8 @@ object AnnIndexStore {
       "stats" -> snap.statsPath)
   }
 
-  /** Writer entry: sweep crashed maintenance writers' orphan version
-    * dirs (flip-last — nothing else of theirs can exist), then
-    * settle a crashed writer's marker through [[UpdateMarker.settle]]
-    * (the stats stage's listing decides commitment — a flipped
-    * commit resolves to a different directory, so the listing-diff
-    * rule works verbatim; maintenance `.swap` markers are never
-    * healed by file deletion). Returns TRUE when `batchId` is
-    * already applied; FALSE after writing this writer's fresh marker.
-    */
-  private def settleEntry(s: SparkSession, fs: FileSystem, idx: Index,
-      batchId: Option[String]): Boolean = {
-    StoreVersions.sweepOrphans(fs, idx.dir, Stages)
-    UpdateMarker.settle(s, fs, idx.dir, "stats", stageMap(s, idx),
-      batchId, recursiveStages = Set("codes"))
-  }
+  /** The partitioned stages of [[stageMap]]. */
+  private val Recursive = Set("codes")
 
   /** Flip the one-row stats counter to `n + delta` — the COMMIT of
     * an [[add]]/[[delete]]: appends before it heal on a crash (the
@@ -436,7 +396,8 @@ object AnnIndexStore {
       batchId: Option[String] = None): Index = {
     val s = newEmb.sparkSession
     val fs = fsOf(s, idx.dir)
-    if (settleEntry(s, fs, idx, batchId))
+    if (UpdateMarker.enter(s, fs, idx.dir, Stages, stageMap(s, idx),
+        batchId, recursiveStages = Recursive))
       return idx // this very batch already applied — no-op
     val snap = idx.pin(s)
     // re-adding a DELETED id would collide with its tombstone (the
@@ -462,8 +423,7 @@ object AnnIndexStore {
       if (newFiles.isEmpty) s.range(1).select(lit(0L).as("_dn"))
       else s.read.parquet(newFiles: _*).agg(count(lit(1)).as("_dn"))
     flipStats(s, fs, idx, snap, added)
-    batchId.foreach(UpdateMarker.writeApplied(fs, idx.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(idx.dir))
+    UpdateMarker.exit(fs, idx.dir, batchId)
     idx
   }
 
@@ -491,7 +451,8 @@ object AnnIndexStore {
       batchId: Option[String] = None): Index = {
     val s = ids.sparkSession
     val fs = fsOf(s, idx.dir)
-    if (settleEntry(s, fs, idx, batchId))
+    if (UpdateMarker.enter(s, fs, idx.dir, Stages, stageMap(s, idx),
+        batchId, recursiveStages = Recursive))
       return idx // this very batch already applied — no-op
     val snap = idx.pin(s)
     // idempotent by construction, and only CURRENTLY-LIVE ids count:
@@ -518,8 +479,7 @@ object AnnIndexStore {
       else s.read.parquet(newFiles: _*)
         .agg((lit(0L) - count(lit(1))).as("_dn"))
     flipStats(s, fs, idx, snap, removed)
-    batchId.foreach(UpdateMarker.writeApplied(fs, idx.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(idx.dir))
+    UpdateMarker.exit(fs, idx.dir, batchId)
     idx
   }
 
@@ -540,27 +500,19 @@ object AnnIndexStore {
     * Crash discipline: flip-last. A crash before the flip leaves the
     * old snapshot serving and orphan version dirs for the next
     * entry's sweep; a crash after the flip but before the marker
-    * delete is settled by dropping the `.swap` maintenance marker
-    * (never healed by file deletion — the [[UpdateMarker
-    * .settleAppend]] decision table). Holds the single-writer marker
+    * delete is settled by dropping the maintenance marker, never by
+    * file deletion ([[UpdateMarker.enter]]'s marker kinds — the
+    * rewritten codes version holds only files the marker's snapshot
+    * never saw). Holds the single-writer marker
     * for its run, so a SIMULTANEOUS [[add]] entry fails loudly at
     * its marker write; the object scaladoc's live-writer caveat
     * applies as everywhere.
     */
   def compact(s: SparkSession, idx: Index): Index = {
     val fs = fsOf(s, idx.dir)
-    settleEntry(s, fs, idx, batchId = None)
-    val marker = UpdateMarker.markerPath(idx.dir)
-    // settle leaves a held UPDATE-shaped marker; this run's marker
-    // must be the MAINTENANCE kind — compact's output lives in fresh
-    // version dirs and commits via the manifest flip, so settlement
-    // must never "heal" codes files for it (the `.swap` decision
-    // table) — swap it for the .swap form.
-    UpdateMarker.delete(fs, marker)
+    UpdateMarker.enter(s, fs, idx.dir, Stages, stageMap(s, idx),
+      batchId = None, maintenance = true, recursiveStages = Recursive)
     val snap = idx.pin(s)
-    UpdateMarker.write(fs, marker, UpdateMarker.State("",
-      Map("codes.swap" ->
-        UpdateMarker.listFilesRecursive(fs, snap.codesPath))))
     // one shuffle by cell → each cell's rows land in exactly one
     // task → the partitioned write emits one file per cell; the
     // MASKED view drops tombstoned rows physically
@@ -571,7 +523,7 @@ object AnnIndexStore {
     StoreVersions.flip(fs, idx.dir,
       Map("codes" -> kV, "tombstones" -> tV), AppendSnap) // THE commit
     StoreVersions.gc(s, fs, idx.dir, Stages)
-    UpdateMarker.delete(fs, marker)
+    UpdateMarker.exit(fs, idx.dir)
     idx
   }
 
@@ -579,20 +531,16 @@ object AnnIndexStore {
     * bad vector batch ([[StoreVersions.rollbackTo]]): models and
     * stats flip back to that epoch's versions, and the codes files
     * [[add]] appended since are DELETED surgically off the
-    * snapshot's file manifest. Enters as a writer (settle + marker;
-    * single-writer collision applies) and clears `_applied` so an
-    * undone batch id folds again. Destructive to the undone epochs
-    * by design; retention bounds the reachable `seq`.
+    * snapshot's file manifest. Enters as a writer
+    * ([[UpdateMarker.rollback]]: single-writer collision applies,
+    * `_applied` clears so an undone batch id folds again).
+    * Destructive to the undone epochs by design; retention bounds the
+    * reachable `seq`.
     */
   def rollback(s: SparkSession, idx: Index, seq: Int): Index = {
     val fs = fsOf(s, idx.dir)
-    settleEntry(s, fs, idx, batchId = None)
-    StoreVersions.rollbackTo(fs, idx.dir, seq, AppendSnap)
-    // deliberately NO gc here: the target snapshot must survive so a
-    // crashed coordinator's RE-RUN of the same rollback converges
-    // (readAt would otherwise be pruned by this very flip's retention
-    // bound); the next normal writer's entry prunes as usual
-    UpdateMarker.clear(fs, idx.dir)
+    UpdateMarker.rollback(s, fs, idx.dir, Stages, stageMap(s, idx), seq,
+      AppendSnap, recursiveStages = Recursive)
     idx
   }
 
@@ -646,9 +594,10 @@ object AnnIndexStore {
     * scan still reads only probed cells; the filter side ships as a
     * plain equi-join for Catalyst/AQE to broadcast when small (an
     * id-list predicate would bloat the plan; a forced broadcast
-    * would OOM on a 10^9-id allow-list — the [[TombBroadcastMaxBytes]]
-    * lesson, left to AQE here because `allowed` is a caller frame
-    * with no on-disk size to inspect). Tombstones still mask through
+    * would OOM on a 10^9-id allow-list — the
+    * [[Tombstones.BroadcastMaxBytes]] lesson, left to AQE here
+    * because `allowed` is a caller frame with no on-disk size to
+    * inspect). Tombstones still mask through
     * [[Snapshot.codes]] underneath.
     */
   def searchFiltered(s: SparkSession, idx: Index, allowed: DataFrame,

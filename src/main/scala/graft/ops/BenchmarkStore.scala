@@ -165,10 +165,7 @@ object BenchmarkStore {
   def build(bench: DataFrame, idCol: String, textCol: String,
       dir: String, k: Int = 3): Store = {
     val s = bench.sparkSession
-    val fs = fsOf(s, dir)
-    if (StoreVersions.read(fs, dir).isEmpty)
-      StageSwap.remove(fs, new Path(dir))
-    else StoreVersions.sweepOrphans(fs, dir, Seq(Stage))
+    UpdateMarker.enterBuild(fsOf(s, dir), dir, Seq(Stage))
     writeRevision(bench, idCol, textCol, dir, k)
   }
 
@@ -180,7 +177,7 @@ object BenchmarkStore {
     val fs = fsOf(bench.sparkSession, store.dir)
     require(StoreVersions.read(fs, store.dir).nonEmpty,
       s"benchmark store at ${store.dir} was never built")
-    StoreVersions.sweepOrphans(fs, store.dir, Seq(Stage))
+    UpdateMarker.enterBuild(fs, store.dir, Seq(Stage))
     writeRevision(bench, idCol, textCol, store.dir, k)
   }
 

@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * ([[StatsStore.delete]]'s two guarantee classes).
   *
   * Cross-store exactly-once rides each store's OWN epoch discipline
-  * (`settleEntry` + `_applied` markers): there is deliberately no
+  * (the [[UpdateMarker]] writer lifecycle's markers + `_applied`
+  * records): there is deliberately no
   * global two-phase commit — on a shared-nothing cluster the
   * coordinator can die between any two store calls, so the contract
   * is CONVERGENCE UNDER REPLAY, not atomicity. A crash mid-ingest
@@ -129,9 +130,9 @@ object CorpusStore {
         val curFs = new org.apache.hadoop.fs.Path(s"${cur.dir}/gate_log")
           .getFileSystem(
             corpus.sparkSession.sessionState.newHadoopConf())
-        StageSwap.remove(curFs,
+        UpdateMarker.remove(curFs,
           new org.apache.hadoop.fs.Path(s"${cur.dir}/gate_log"))
-        StageSwap.remove(curFs,
+        UpdateMarker.remove(curFs,
           new org.apache.hadoop.fs.Path(s"${cur.dir}/$QuarantineSub"))
         cur
       },
@@ -938,8 +939,8 @@ object CorpusStore {
       }
     fs.mkdirs(dstDir)
     val dst = new org.apache.hadoop.fs.Path(dstDir, name)
-    require(fs.rename(part, dst), s"single-file move to $dst failed")
-    StageSwap.remove(fs, tmp)
+    UpdateMarker.rename(fs, part, dst)
+    UpdateMarker.remove(fs, tmp)
   }
 
   /** Tombstone `ids` in all three stores under ONE batch id —
@@ -1080,7 +1081,7 @@ object CorpusStore {
       val dir = s"$dstRoot/$sub"
       if (fs.exists(StoreVersions.manifestPath(dir))) reopen
       else {
-        StageSwap.remove(fs, new org.apache.hadoop.fs.Path(dir))
+        UpdateMarker.remove(fs, new org.apache.hadoop.fs.Path(dir))
         doIt
       }
     }

@@ -106,13 +106,11 @@ object CurationStore {
       * refreshes at the next [[CurationStore.compact]], which
       * re-resolves components over the physically filtered pairs.
       * Broadcast while the set is small, shuffle past the
-      * [[CurationStore.TombBroadcastMaxBytes]] ceiling.
+      * [[Tombstones.BroadcastMaxBytes]] ceiling.
       */
     private[ops] def tombMask(s: SparkSession, df: DataFrame,
         onCols: Seq[String]): DataFrame =
-      Tombstones.mask(s, df, idCol, tombSrc,
-        CurationStore.TombBroadcastMaxBytes,
-        CurationStore.tombBroadcastDefault, onCols)
+      Tombstones.mask(s, df, idCol, tombSrc, onCols)
 
     def signatures(s: SparkSession): DataFrame =
       tombMask(s, stageRead(s, "signatures", sigPath), Seq(idCol))
@@ -237,19 +235,6 @@ object CurationStore {
     def labels(s: SparkSession): DataFrame = pin(s).labels(s)
   }
 
-  /** Ceiling (bytes of tombstone parquet) up to which the deleted-id
-    * mask rides reads as a BROADCAST; past it the mask degrades to a
-    * shuffle anti-join instead of OOMing ([[DeltaBroadcastMaxBytes]]'
-    * rule for the deletion set — hitting it means [[compact]] is
-    * overdue). */
-  val TombBroadcastMaxBytes = "spark.graft.curation.tombBroadcastMaxBytes"
-  private[ops] val tombBroadcastDefault = 32L * 1024 * 1024
-
-  private[ops] def tombBroadcastable(s: SparkSession,
-      store: Store): Boolean =
-    Tombstones.broadcastable(s, store.tombDir(s), TombBroadcastMaxBytes,
-      tombBroadcastDefault)
-
   /** Ceiling (bytes of delta parquet) up to which the outstanding
     * delta rides label reads as a BROADCAST. The delta grows with
     * drift since the last [[compact]] — unbounded if a caller keeps
@@ -363,22 +348,6 @@ object CurationStore {
       "stats" -> snap.statsPath)
   }
 
-  /** Writer entry: sweep crashed writers' orphan version dirs
-    * (flip-last — nothing else of theirs can exist), then settle a
-    * crashed writer's marker through [[UpdateMarker.settle]] (the
-    * stats stage's listing decides commitment — a flipped commit
-    * resolves to a different directory, so the listing-diff rule
-    * works verbatim; an uncommitted crash's partial
-    * signature/pair/tombstone appends are healed off the marker's
-    * listings).
-    */
-  private def settleEntry(spark: SparkSession, fs: FileSystem,
-      store: Store, batchId: Option[String]): Boolean = {
-    StoreVersions.sweepOrphans(fs, store.dir, Stages)
-    UpdateMarker.settle(spark, fs, store.dir, "stats",
-      stageMap(spark, store), batchId)
-  }
-
   /** Deterministic catalog name for `storeDir`'s bucketed labels
     * table (bucketing survives only through the catalog). */
   private def tableNameFor(storeDir: String): String =
@@ -454,18 +423,7 @@ object CurationStore {
     val spark = docs.sparkSession
     val fs = new Path(storeDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // settle the directory's previous life: a VERSIONED previous
-    // life keeps its committed snapshot — serve-through-rebuild —
-    // shedding only orphan version dirs; a PRE-VERSIONING or foreign
-    // layout is reset wholesale. Stale markers/_applied clear either
-    // way (a rebuild resets batch-id lineage; a crashed update's
-    // marker would "heal" fresh files against a stale snapshot).
-    if (StoreVersions.read(fs, storeDir).isEmpty)
-      for (st <- Stages ++ Seq("labels.next", "labels.old",
-          "stats.next", "stats.old", "stats_stale"))
-        StageSwap.remove(fs, new Path(s"$storeDir/$st"))
-    else StoreVersions.sweepOrphans(fs, storeDir, Stages)
-    UpdateMarker.clear(fs, storeDir)
+    UpdateMarker.enterBuild(fs, storeDir, Stages)
     // stage 1 — signatures: one partition-local pass over the text
     // (the only stage that touches the corpus)
     val sigV = StoreVersions.next(fs, storeDir, "signatures")
@@ -609,11 +567,8 @@ object CurationStore {
           if (numBands >= 1) numBands else b,
           if (minEst >= 0) minEst else e)
       }
-    // heal + settle + replay-check + fresh marker: the ONE shared
-    // protocol definition ([[UpdateMarker.settle]] via
-    // [[settleEntry]]); sig/pairs/tomb are the append-only sides
-    // whose partial files a pre-commit crash leaves behind
-    if (settleEntry(spark, fs, store, batchId))
+    if (UpdateMarker.enter(spark, fs, store.dir, Stages,
+        stageMap(spark, store), batchId))
       return store // this very batch already applied — no-op
     val snap = store.pin(spark)
     // numHashes is NOT free to override: the batch's signature rows
@@ -671,8 +626,7 @@ object CurationStore {
         .write.mode("overwrite").parquet(sV)
       StoreVersions.flip(fs, store.dir, Map("stats" -> sV), AppendSnap)
       StoreVersions.gc(spark, fs, store.dir, Seq("stats"))
-      batchId.foreach(UpdateMarker.writeApplied(fs, store.dir, _))
-      UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+      UpdateMarker.exit(fs, store.dir, batchId)
       return store
     }
 
@@ -733,10 +687,7 @@ object CurationStore {
     StoreVersions.flip(fs, store.dir,
       Map(commitStage -> cV, "stats" -> sV), AppendSnap)
     StoreVersions.gc(spark, fs, store.dir, Seq(commitStage, "stats"))
-    // record the committed batch BEFORE dropping the in-flight
-    // marker, so at every instant one of the two files names it
-    batchId.foreach(UpdateMarker.writeApplied(fs, store.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+    UpdateMarker.exit(fs, store.dir, batchId)
     store
   }
 
@@ -773,7 +724,8 @@ object CurationStore {
     val idCol = store.idCol
     val fs = new Path(store.dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (settleEntry(spark, fs, store, batchId))
+    if (UpdateMarker.enter(spark, fs, store.dir, Stages,
+        stageMap(spark, store), batchId))
       return store // this very batch already applied — no-op
     val snap = store.pin(spark)
     // append only CURRENTLY-STORED ids: signatures(spark) is the
@@ -835,8 +787,7 @@ object CurationStore {
     StoreVersions.flip(fs, store.dir,
       Map(commitStage -> cV, "stats" -> sV), AppendSnap)
     StoreVersions.gc(spark, fs, store.dir, Seq(commitStage, "stats"))
-    batchId.foreach(UpdateMarker.writeApplied(fs, store.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+    UpdateMarker.exit(fs, store.dir, batchId)
     store
   }
 
@@ -861,8 +812,8 @@ object CurationStore {
     * cluster scale that registration is the metastore update a
     * maintenance window performs, not part of the data path.
     *
-    * SINGLE WRITER: compact participates in the [[UpdateMarker]]
-    * protocol like [[update]] — it settles a crashed predecessor at
+    * SINGLE WRITER: compact enters the [[UpdateMarker]] lifecycle as
+    * a maintenance writer — it settles a crashed predecessor at
     * entry (healing that update's partial appends BEFORE reading the
     * labels it folds) and holds the in-flight marker for its run, so
     * simultaneous writer entries collide loudly at the fail-if-exists
@@ -872,14 +823,8 @@ object CurationStore {
     require(buckets > 0, "buckets must be positive")
     val fs = new Path(store.dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    // compact is a store WRITER and participates in the UpdateMarker
-    // single-writer protocol like update(): settle a crashed
-    // predecessor (update or compact) — healing its partial appends
-    // BEFORE this run reads the labels it folds — then hold the
-    // in-flight marker so simultaneous entries collide loudly at the
-    // fail-if-exists write. (batchId None: compaction is
-    // maintenance, not a batch — it never records `_applied`.)
-    settleEntry(s, fs, store, batchId = None)
+    UpdateMarker.enter(s, fs, store.dir, Stages, stageMap(s, store),
+      batchId = None, maintenance = true)
     val snap = store.pin(s)
     val name = tableNameFor(store.dir)
     if (snap.tombstonesIfAny(s).isDefined)
@@ -898,7 +843,7 @@ object CurationStore {
     registerBucketedLabels(s, name, lV, buckets, store.idCol,
       labelSchema)
     StoreVersions.gc(s, fs, store.dir, Stages)
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+    UpdateMarker.exit(fs, store.dir)
     Store(store.dir, store.idCol, Some(name))
   }
 
@@ -957,7 +902,7 @@ object CurationStore {
     registerBucketedLabels(s, name, lV, buckets, store.idCol,
       labelSchema)
     StoreVersions.gc(s, fs, store.dir, Stages)
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+    UpdateMarker.exit(fs, store.dir)
     Store(store.dir, store.idCol, Some(name))
   }
 
@@ -966,8 +911,8 @@ object CurationStore {
     * map and exact counter flip back to that epoch's versions, and
     * the signature/pair/tombstone files folded since are DELETED
     * surgically off the snapshot's file manifest. Enters as a writer
-    * (settle + marker; single-writer collision applies) and clears
-    * `_applied` so an undone batch id folds again. On a bucketed
+    * ([[UpdateMarker.rollback]]: single-writer collision applies,
+    * `_applied` clears so an undone batch id folds again). On a bucketed
     * store the catalog may point past the restored labels version —
     * reads degrade to the guarded file scan (correct rows, one
     * exchange) until the next [[compact]] re-registers. Destructive
@@ -977,13 +922,8 @@ object CurationStore {
   def rollback(s: SparkSession, store: Store, seq: Int): Store = {
     val fs = new Path(store.dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    settleEntry(s, fs, store, batchId = None)
-    StoreVersions.rollbackTo(fs, store.dir, seq, AppendSnap)
-    // deliberately NO gc here: the target snapshot must survive so a
-    // crashed coordinator's RE-RUN of the same rollback converges
-    // (readAt would otherwise be pruned by this very flip's retention
-    // bound); the next normal writer's entry prunes as usual
-    UpdateMarker.clear(fs, store.dir)
+    UpdateMarker.rollback(s, fs, store.dir, Stages, stageMap(s, store),
+      seq, AppendSnap)
     store
   }
 
@@ -1133,15 +1073,9 @@ object CurationStore {
       textCol: String, numBands: Int = UseStoredDials,
       minEst: Double = UseStoredDials,
       maxBucketSize: Long = Long.MaxValue): DataFrame = {
-    val idCol = store.idCol
-    val (bandsR, minEstR) = resolveBanding(s, store, numBands, minEst)
-    val sigs = store.signatures(s)
-    val numHashes = sigs.columns.count(_.matches("h\\d+"))
-    require(numHashes > 0,
-      s"store at ${store.dir} has no h* signature columns to screen against")
-    val history = sigs.join(batch.select(col(idCol)), Seq(idCol),
-      "left_anti")
-    Dedup.incrementalDecisions(batch, history, idCol, textCol,
+    val (history, numHashes, bandsR, minEstR) =
+      screenSetup(s, store, batch, numBands, minEst)
+    Dedup.incrementalDecisions(batch, history, store.idCol, textCol,
       numHashes, bandsR, minEstR, maxBucketSize)
   }
 
@@ -1157,16 +1091,28 @@ object CurationStore {
       textCol: String, numBands: Int = UseStoredDials,
       minEst: Double = UseStoredDials,
       maxBucketSize: Long = Long.MaxValue): DataFrame = {
-    val idCol = store.idCol
+    val (history, numHashes, bandsR, minEstR) =
+      screenSetup(s, store, batch, numBands, minEst)
+    Dedup.incrementalDecisionsAttributed(batch, history, store.idCol,
+      textCol, numHashes, bandsR, minEstR, maxBucketSize)
+  }
+
+  /** The screens' shared set-up: the history side (tomb-masked stored
+    * signatures minus the batch's own ids — see [[screen]]), its
+    * signature width, and the banding resolved against the store's
+    * dials. The two [[Dedup]] decision calls stay separate (the
+    * plan-shape reason at [[Dedup.incrementalDecisions]]). */
+  private def screenSetup(s: SparkSession, store: Store,
+      batch: DataFrame, numBands: Int,
+      minEst: Double): (DataFrame, Int, Int, Double) = {
     val (bandsR, minEstR) = resolveBanding(s, store, numBands, minEst)
     val sigs = store.signatures(s)
     val numHashes = sigs.columns.count(_.matches("h\\d+"))
     require(numHashes > 0,
       s"store at ${store.dir} has no h* signature columns to screen against")
-    val history = sigs.join(batch.select(col(idCol)), Seq(idCol),
-      "left_anti")
-    Dedup.incrementalDecisionsAttributed(batch, history, idCol,
-      textCol, numHashes, bandsR, minEstR, maxBucketSize)
+    val history = sigs.join(batch.select(col(store.idCol)),
+      Seq(store.idCol), "left_anti")
+    (history, numHashes, bandsR, minEstR)
   }
 
   /** [[screen]] with a BENCHMARK-DECONTAMINATION criterion layered

@@ -871,6 +871,23 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDocFreq: Long = Long.MaxValue): DataFrame = {
+    val inter = shingleIntersections(df, idCol, textCol, maxDocFreq)
+    val jac = col("i").cast("double") /
+      (col("n1") + col("n2") - col("i")).cast("double")
+    inter
+      .filter(jac >= threshold)
+      .select(col("d1"), col("d2"), round(jac, 3).as("jaccard"))
+  }
+
+  /** The shared shingle-overlap kernel of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: per doc pair (d1 < d2) sharing a joinable
+    * word-3-gram, the intersection size `i` and both docs' full
+    * shingle counts `n1`/`n2`. Shingles with doc frequency 1 (can
+    * never intersect) or above `maxDocFreq` (the hot-shingle cap)
+    * leave the join only — the counts keep them.
+    */
+  private def shingleIntersections(df: DataFrame, idCol: String,
+      textCol: String, maxDocFreq: Long): DataFrame = {
     // (id, shingle) arrives unique per doc. Per-doc set sizes ride the
     // rows as a window over the id partitioning, doc frequency as a
     // second window over the s partitioning (the same partitioning the
@@ -885,17 +902,12 @@ object Dedup {
       .withColumn("_df", count(lit(1)).over(Window.partitionBy("s")))
       .filter(col("_df") >= 2 && col("_df") <= maxDocFreq)
       .drop("_df")
-    val inter = shJ.as("a")
+    shJ.as("a")
       .join(shJ.as("b"), col("a.s") === col("b.s") &&
         col(s"a.$idCol") < col(s"b.$idCol"))
       .groupBy(col(s"a.$idCol").as("d1"), col(s"b.$idCol").as("d2"))
       .agg(count(lit(1)).as("i"),
         first(col("a.n")).as("n1"), first(col("b.n")).as("n2"))
-    val jac = col("i").cast("double") /
-      (col("n1") + col("n2") - col("i")).cast("double")
-    inter
-      .filter(jac >= threshold)
-      .select(col("d1"), col("d2"), round(jac, 3).as("jaccard"))
   }
 
   /** Per-doc n-gram NOVELTY: the fraction of a doc's distinct
@@ -935,18 +947,7 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDocFreq: Long = Long.MaxValue): DataFrame = {
-    val sh = shingleRows(widen(df), idCol, textCol, 3)
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(idCol)))
-    val shJ = sh
-      .withColumn("_df", count(lit(1)).over(Window.partitionBy("s")))
-      .filter(col("_df") >= 2 && col("_df") <= maxDocFreq)
-      .drop("_df")
-    val inter = shJ.as("a")
-      .join(shJ.as("b"), col("a.s") === col("b.s") &&
-        col(s"a.$idCol") < col(s"b.$idCol"))
-      .groupBy(col(s"a.$idCol").as("d1"), col(s"b.$idCol").as("d2"))
-      .agg(count(lit(1)).as("i"),
-        first(col("a.n")).as("n1"), first(col("b.n")).as("n2"))
+    val inter = shingleIntersections(df, idCol, textCol, maxDocFreq)
     val both = inter
       .select(col("d1").as("src"), col("d2").as("dst"),
         col("i"), col("n1").as("ns"))

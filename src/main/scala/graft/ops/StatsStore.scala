@@ -66,6 +66,15 @@ object StatsStore {
     */
   val ThetaLgNom = 12
 
+  /** The one versioned stage — pure-replace, and the commit stage. */
+  private val Stages = Seq("stats")
+
+  /** The [[UpdateMarker]] stage map: `stats` resolved to its current
+    * version — the store has no append stages to heal. */
+  private def stageMap(fs: org.apache.hadoop.fs.FileSystem,
+      store: Store): Map[String, String] =
+    Map("stats" -> StoreVersions.resolve(fs, store.dir, "stats"))
+
   final case class Store(dir: String) {
 
     private def fsOf(s: SparkSession) =
@@ -240,16 +249,7 @@ object StatsStore {
     val spark = docs.sparkSession
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // previous-life settle (the serving stores' build discipline): a
-    // versioned life keeps its committed snapshot — readers serve
-    // THROUGH the rebuild — shedding only orphans; a pre-versioning
-    // layout is reset wholesale. Stale markers/_applied clear either
-    // way (streaming epochs restart at 0).
-    if (StoreVersions.read(fs, storeDir).isEmpty)
-      for (st <- Seq("stats", "stats.next", "stats.old"))
-        StageSwap.remove(fs, new org.apache.hadoop.fs.Path(s"$storeDir/$st"))
-    else StoreVersions.sweepOrphans(fs, storeDir, Seq("stats"))
-    UpdateMarker.clear(fs, storeDir)
+    UpdateMarker.enterBuild(fs, storeDir, Stages)
     val sV = StoreVersions.next(fs, storeDir, "stats")
     aggregate(docs, textCol, sourceCol)
       .withColumn("stale", lit(false))
@@ -262,16 +262,17 @@ object StatsStore {
   /** Fold a new batch into the store: aggregate the BATCH alone,
     * full-outer-merge per source (exact fields add, sketches union,
     * either side may be absent — a quiet day or a brand-new source),
-    * swap in by write-to-temp + rename (same crash discipline as
-    * [[CurationStore.update]]'s label stage). Unlike CurationStore
-    * there is no id-disjointness contract: stats rows are additive
-    * over MULTISETS, so re-sending a doc double-counts it — the
-    * caller's dedup gate (q110's Bloom filter is the scale tool)
-    * decides what counts as new.
+    * written as the stage's next version and committed by the
+    * manifest flip (the [[UpdateMarker]] writer lifecycle every store
+    * shares). Unlike CurationStore there is no id-disjointness
+    * contract: stats rows are additive over MULTISETS, so re-sending
+    * a doc double-counts it — the caller's dedup gate (q110's Bloom
+    * filter is the scale tool) decides what counts as new.
     *
-    * Crash/re-run discipline: an update that dies before its swap
-    * COMMITS rolls back ([[StageSwap.recover]]) and the re-run is
-    * exactly-once. Passing a `batchId` (non-empty — the empty string
+    * Crash/re-run discipline: an update that dies before its flip
+    * leaves only an orphan version dir, swept at the next writer's
+    * entry, and the re-run is exactly-once. Passing a `batchId`
+    * (non-empty — the empty string
     * is the marker's "no key" encoding) additionally closes the
     * committed-but-unacknowledged window via the [[UpdateMarker]]
     * protocol: a re-run of an already-committed batch is detected —
@@ -291,15 +292,8 @@ object StatsStore {
     val spark = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(store.dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // heal + settle + replay-check + fresh marker: the ONE shared
-    // protocol definition ([[UpdateMarker.settle]]); `stats` is this
-    // store's only (and therefore commit) stage, resolved to its
-    // current version — a flipped commit resolves to a DIFFERENT
-    // directory, so the listing-diff rule works verbatim
-    StoreVersions.sweepOrphans(fs, store.dir, Seq("stats"))
-    if (UpdateMarker.settle(spark, fs, store.dir, "stats",
-        Map("stats" -> StoreVersions.resolve(fs, store.dir, "stats")),
-        batchId))
+    if (UpdateMarker.enter(spark, fs, store.dir, Stages,
+        stageMap(fs, store), batchId))
       return store // this very batch already applied — no-op
     // null-safe join key: a null source is a legal (if unwelcome)
     // group, and plain equality would never match it to its stored
@@ -335,10 +329,7 @@ object StatsStore {
     merged.write.mode("overwrite").parquet(sV)
     StoreVersions.flip(fs, store.dir, Map("stats" -> sV)) // THE commit
     StoreVersions.gc(spark, fs, store.dir, Seq("stats"))
-    // record the committed batch BEFORE dropping the in-flight
-    // marker, so at every instant one of the two files names it
-    batchId.foreach(UpdateMarker.writeApplied(fs, store.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+    UpdateMarker.exit(fs, store.dir, batchId)
     store
   }
 
@@ -372,7 +363,7 @@ object StatsStore {
     * fabricating a negative row.
     *
     * Crash/replay discipline is [[update]]'s verbatim: the stats
-    * swap is the commit, `batchId` makes every replay window a
+    * flip is the commit, `batchId` makes every replay window a
     * detected no-op.
     */
   def delete(store: Store, deletedDocs: DataFrame, textCol: String,
@@ -380,10 +371,8 @@ object StatsStore {
     val spark = deletedDocs.sparkSession
     val fs = new org.apache.hadoop.fs.Path(store.dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    StoreVersions.sweepOrphans(fs, store.dir, Seq("stats"))
-    if (UpdateMarker.settle(spark, fs, store.dir, "stats",
-        Map("stats" -> StoreVersions.resolve(fs, store.dir, "stats")),
-        batchId))
+    if (UpdateMarker.enter(spark, fs, store.dir, Stages,
+        stageMap(fs, store), batchId))
       return store // this very batch already applied — no-op
     val gone = aggregate(deletedDocs, textCol, sourceCol)
       .select(col("source").as("_gsrc"), col("docs").as("_gdocs"),
@@ -400,8 +389,7 @@ object StatsStore {
     merged.write.mode("overwrite").parquet(sV)
     StoreVersions.flip(fs, store.dir, Map("stats" -> sV)) // THE commit
     StoreVersions.gc(spark, fs, store.dir, Seq("stats"))
-    batchId.foreach(UpdateMarker.writeApplied(fs, store.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+    UpdateMarker.exit(fs, store.dir, batchId)
     store
   }
 
@@ -412,25 +400,23 @@ object StatsStore {
     * The stats twin of the serving stores' compact (removals become
     * physical there, sketch debt is settled here); the
     * [[CorpusStore]] transaction calls it with the corpus it
-    * maintains. Commits through the same settle + swap protocol as
-    * [[update]] (maintenance takes no batchId, like every compact).
+    * maintains. Commits through the same flip as [[update]], as a
+    * maintenance writer (no batchId, like every compact).
     */
   def compact(store: Store, liveDocs: DataFrame, textCol: String,
       sourceCol: String): Store = {
     val spark = liveDocs.sparkSession
     val fs = new org.apache.hadoop.fs.Path(store.dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    StoreVersions.sweepOrphans(fs, store.dir, Seq("stats"))
-    UpdateMarker.settle(spark, fs, store.dir, "stats",
-      Map("stats" -> StoreVersions.resolve(fs, store.dir, "stats")),
-      batchId = None)
+    UpdateMarker.enter(spark, fs, store.dir, Stages, stageMap(fs, store),
+      batchId = None, maintenance = true)
     val sV = StoreVersions.next(fs, store.dir, "stats")
     aggregate(liveDocs, textCol, sourceCol)
       .withColumn("stale", lit(false))
       .write.mode("overwrite").parquet(sV)
     StoreVersions.flip(fs, store.dir, Map("stats" -> sV))
     StoreVersions.gc(spark, fs, store.dir, Seq("stats"))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(store.dir))
+    UpdateMarker.exit(fs, store.dir)
     store
   }
 
@@ -439,20 +425,14 @@ object StatsStore {
     * (each version holds the complete per-source row set), so
     * restoring its version restores every counter and sketch to that
     * epoch exactly — no re-derive pass over the corpus. Enters as a
-    * writer (settle + marker; single-writer collision applies) and
-    * clears `_applied` so an undone batch id folds again; no gc (a
-    * replayed rollback must find its target snapshot — the next
-    * normal writer prunes).
+    * writer ([[UpdateMarker.rollback]]: single-writer collision
+    * applies, `_applied` clears so an undone batch id folds again).
     */
   def rollback(s: SparkSession, store: Store, seq: Int): Store = {
     val fs = new org.apache.hadoop.fs.Path(store.dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    StoreVersions.sweepOrphans(fs, store.dir, Seq("stats"))
-    UpdateMarker.settle(s, fs, store.dir, "stats",
-      Map("stats" -> StoreVersions.resolve(fs, store.dir, "stats")),
-      batchId = None)
-    StoreVersions.rollbackTo(fs, store.dir, seq, Map.empty)
-    UpdateMarker.clear(fs, store.dir)
+    UpdateMarker.rollback(s, fs, store.dir, Stages, stageMap(fs, store),
+      seq, Map.empty)
     store
   }
 

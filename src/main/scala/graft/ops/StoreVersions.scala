@@ -4,13 +4,12 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Reader-isolation snapshots for the persisted stores — the
-  * Iceberg-lite step the swap-in-place protocol cannot provide: under
-  * [[StageSwap]] a maintenance commit RENAMES the live stage away, so
-  * a reader whose plan resolved the stage's files before the swap
-  * (Spark pins a parquet scan's file listing at DataFrame creation)
-  * collects FileNotFound — or, with two swap-committed stages, a mix
-  * of old and new. A deployed service serves WHILE maintaining; this
-  * module makes that safe:
+  * Iceberg-lite commit layer. A reader's plan pins a parquet scan's
+  * file listing at DataFrame creation, so a commit that rewrote or
+  * renamed live files would make a reader planned before it collect
+  * FileNotFound — or, across two rewritten stages, a mix of old and
+  * new. A deployed service serves WHILE maintaining; this module
+  * makes that safe:
   *
   *  - every maintained stage's data lives in an immutable VERSION
   *    directory (`<store>/<stage>/v-00001/...`); data files, once a
@@ -27,16 +26,13 @@ import org.apache.spark.sql.SparkSession
   *    for as long as retention holds;
   *  - a MULTI-stage maintenance commit (compact's postings + doclens
   *    + delta-fold + tombstone-clear) is ONE flip — atomic across
-  *    stages, which structurally removes the mixed-stage and
-  *    roll-forward windows the in-place protocol had to close with
-  *    per-file fold listings;
+  *    stages, so no crash point or reader can observe some of its
+  *    stages rewritten and others not;
   *  - crash recovery collapses to "flip last": the manifest only ever
   *    names fully-written versions, so an interrupted writer leaves
   *    nothing but orphan version dirs NUMBERED ABOVE the manifest's
   *    current, swept by the next writer's entry ([[sweepOrphans]] —
-  *    safe under the stores' standing single-writer contract). No
-  *    rollback, no `_SUCCESS` adjudication, no commit-stage listing
-  *    diff is needed for versioned stages.
+  *    safe under the stores' standing single-writer contract).
   *
   * Retention: [[gc]] keeps the current version plus the
   * [[RetainVersions]] most recent prior versions per stage (default
@@ -46,14 +42,13 @@ import org.apache.spark.sql.SparkSession
   * exactly as an expired Iceberg snapshot does. Raise the dial where
   * long-running readers overlap frequent maintenance.
   *
-  * The [[UpdateMarker]] protocol is unchanged on top of this: markers
-  * still serialize writers and heal APPEND stages (appends land
-  * inside the current version dir and are invisible to
-  * already-planned readers, so they need no versioning), `_applied`
-  * still witnesses append commits, and `settle`'s listing-diff
-  * commitment test keeps working verbatim because a flipped commit
-  * stage resolves to a DIFFERENT directory whose listing cannot equal
-  * the pre-flip snapshot.
+  * The [[UpdateMarker]] writer lifecycle runs on top of this: markers
+  * serialize writers and heal APPEND stages (appends land inside the
+  * current version dir and are invisible to already-planned readers,
+  * so they need no versioning), `_applied` witnesses batch commits,
+  * and the marker's listing-diff commitment test works because a
+  * flipped commit stage resolves to a DIFFERENT directory whose
+  * listing cannot equal the pre-flip snapshot.
   */
 object StoreVersions {
 
@@ -205,9 +200,9 @@ object StoreVersions {
     val nextSeq = snapshotFiles(fs, storeDir).lastOption
       .map(_._1).getOrElse(0) + 1
     val snapDst = new Path(snapDir, f"s-$nextSeq%05d")
-    require(fs.rename(writeTmp(manifestBody + fileLines), snapDst),
-      s"snapshot record rename to $snapDst failed — a silent miss " +
-        "here would leave this flip unreachable to time travel")
+    // checked: a silent miss would leave this flip unreachable to
+    // time travel
+    UpdateMarker.rename(fs, writeTmp(manifestBody + fileLines), snapDst)
     // FileContext.rename(OVERWRITE) is the atomic-replace primitive
     // on HDFS and local — a plain FileSystem.rename refuses an
     // existing destination on HDFS, and delete-then-rename would open
@@ -323,8 +318,8 @@ object StoreVersions {
     * holding pins newer than `seq` lose their appended files (unlike
     * maintenance, which retention protects). A crash mid-delete
     * re-runs to completion (deletions are idempotent; the flip is
-    * last). Single-writer contract applies — the store wrappers
-    * settle markers and clear `_applied` (a rolled-back batch id
+    * last). Single-writer contract applies — [[UpdateMarker.rollback]]
+    * settles markers and clears `_applied` (a rolled-back batch id
     * must become foldable again) around this call; the clear runs
     * LAST, so a crash between the flip and it leaves `_applied`
     * naming an already-undone batch — the caller's recovery is to
@@ -343,7 +338,7 @@ object StoreVersions {
       val dir = new Path(s"$storeDir/$stage/$v")
       val keep = st.files.getOrElse(stage, Seq.empty).map(_._1).toSet
       listWithSizes(fs, dir, rec).map(_._1).filterNot(keep)
-        .foreach(f => StageSwap.remove(fs, new Path(f)))
+        .foreach(f => UpdateMarker.remove(fs, new Path(f)))
     }
     flip(fs, storeDir,
       st.versions.map { case (stage, v) =>
@@ -425,7 +420,7 @@ object StoreVersions {
     val m = read(fs, storeDir)
     for (stage <- stages; cur <- m.get(stage).flatMap(verNum);
          (n, p) <- versions(fs, storeDir, stage) if n > cur)
-      StageSwap.remove(fs, p)
+      UpdateMarker.remove(fs, p)
   }
 
   /** Retention GC: per stage, drop versions below the current beyond
@@ -461,7 +456,7 @@ object StoreVersions {
       val below = versions(fs, storeDir, stage).filter(_._1 < cur)
       below.dropRight(retain)
         .filterNot { case (_, p) => keep.contains(p.getName) }
-        .foreach { case (_, p) => StageSwap.remove(fs, p) }
+        .foreach { case (_, p) => UpdateMarker.remove(fs, p) }
     }
     val snapDir = new Path(s"$storeDir/_snapshots")
     if (fs.exists(snapDir))
@@ -472,6 +467,6 @@ object StoreVersions {
         })
         .sortBy(_._1).dropRight(retain + 1)
         .filterNot { case (n, _) => keepSeqs.contains(n) }
-        .foreach { case (_, p) => StageSwap.remove(fs, p) }
+        .foreach { case (_, p) => UpdateMarker.remove(fs, p) }
   }
 }

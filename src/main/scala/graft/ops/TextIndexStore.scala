@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,7 +63,7 @@ import org.apache.spark.sql.functions._
   * [[bm25]] scores any term set from the stored stages through the
   * SAME kernel as the from-corpus path ([[TextOps.bm25ScoreFrames]]
   * — one definition, so the two cannot drift). Crash/replay
-  * discipline is [[UpdateMarker.settle]]'s protocol with the flip as
+  * discipline is the [[UpdateMarker]] writer lifecycle with the flip as
   * the commit (stats is the commit stage — a flipped stats stage
   * resolves to a different directory, so the listing-diff commitment
   * test works verbatim; postings/doclens are the append-only sides
@@ -150,16 +150,14 @@ object TextIndexStore {
       * compactions: the deleted docs' postings/doclens rows are
       * masked at read time (the shared [[Tombstones.mask]] —
       * broadcast anti-join while the set is small, the
-      * degrade-don't-OOM rule past [[TombBroadcastMaxBytes]]) and
+      * degrade-don't-OOM rule past [[Tombstones.BroadcastMaxBytes]]) and
       * the stats counters were decremented exactly at delete time,
       * so every score equals a rebuild without those docs;
       * [[TextIndexStore.compact]] makes the removal physical and
       * clears the tombstones.
       */
     private def masked(s: SparkSession, df: DataFrame): DataFrame =
-      Tombstones.mask(s, df, idCol, tombSrc,
-        TextIndexStore.TombBroadcastMaxBytes,
-        TextIndexStore.tombBroadcastDefault, Seq(idCol))
+      Tombstones.mask(s, df, idCol, tombSrc, Seq(idCol))
 
     /** Every LIVE postings row: (base ∪ outstanding delta) minus
       * tombstoned docs. Postings are per-document derivations with
@@ -241,19 +239,6 @@ object TextIndexStore {
     def doclens(s: SparkSession): DataFrame = pin(s).doclens(s)
     def stats(s: SparkSession): DataFrame = pin(s).stats(s)
   }
-
-  /** Ceiling (bytes of tombstone parquet) up to which the deleted-id
-    * mask rides reads as a BROADCAST; past it readers degrade to the
-    * shuffle anti-join instead of OOMing. Hitting it means
-    * [[compact]] is overdue (compaction makes removals physical and
-    * empties the set). */
-  val TombBroadcastMaxBytes = "spark.graft.text.tombBroadcastMaxBytes"
-  private[ops] val tombBroadcastDefault = 32L * 1024 * 1024
-
-  private[ops] def tombBroadcastable(s: SparkSession,
-      idx: Index): Boolean =
-    Tombstones.broadcastable(s, idx.tombDir(s), TombBroadcastMaxBytes,
-      tombBroadcastDefault)
 
   /** Deterministic catalog name for `storeDir`'s bucketed postings
     * table (bucketing survives only through the catalog) — the
@@ -385,21 +370,6 @@ object TextIndexStore {
         .agg(count(lit(1)).as("df_part"), max("tf").as("max_tf"),
           min("dl").as("min_dl"))
 
-  /** Writer entry: sweep crashed maintenance writers' orphan version
-    * dirs (flip-last — nothing else of theirs can exist), then
-    * settle a crashed writer's marker through [[UpdateMarker.settle]]
-    * (the stats stage's listing decides commitment — a flipped
-    * commit resolves to a different directory, so the listing-diff
-    * rule works verbatim; maintenance markers are never healed by
-    * file deletion — the `.swap` decision table).
-    */
-  private def settleEntry(s: SparkSession, fs: FileSystem, idx: Index,
-      batchId: Option[String]): Boolean = {
-    StoreVersions.sweepOrphans(fs, idx.dir, Stages)
-    UpdateMarker.settle(s, fs, idx.dir, "stats", stageMap(s, idx),
-      batchId)
-  }
-
   /** Run the one text pass over `docs` and write the store under
     * `dir` as a fresh SNAPSHOT, committed by one manifest flip — a
     * store already serving from `dir` keeps serving the old snapshot
@@ -420,19 +390,7 @@ object TextIndexStore {
     val s = docs.sparkSession
     val fs = new Path(dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    // settle the directory's previous life (the AnnIndexStore.build
-    // discipline): a VERSIONED previous life keeps its committed
-    // snapshot — serve-through-rebuild — shedding only orphan
-    // version dirs; a PRE-VERSIONING or foreign layout is reset
-    // wholesale. Stale markers/_applied clear either way (a rebuild
-    // resets batch-id lineage; a crashed update's marker would
-    // "heal" fresh files against a stale snapshot).
-    if (StoreVersions.read(fs, dir).isEmpty)
-      for (st <- Stages ++ Seq("postings.next", "postings.old",
-          "doclens.next", "doclens.old", "stats.next", "stats.old"))
-        StageSwap.remove(fs, new Path(s"$dir/$st"))
-    else StoreVersions.sweepOrphans(fs, dir, Stages)
-    UpdateMarker.clear(fs, dir)
+    UpdateMarker.enterBuild(fs, dir, Stages)
     // the ONE text pass; doclens and the counters are columnar
     // derivations of the just-written postings version (lineage cut
     // at the store boundary, the AnnIndexStore discipline)
@@ -524,7 +482,8 @@ object TextIndexStore {
     val s = newDocs.sparkSession
     val fs = new Path(idx.dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    if (settleEntry(s, fs, idx, batchId))
+    if (UpdateMarker.enter(s, fs, idx.dir, Stages, stageMap(s, idx),
+        batchId))
       return idx // this very batch already applied — no-op
     val snap = idx.pin(s)
     // re-adding a DELETED id would collide with its tombstone: the
@@ -584,8 +543,7 @@ object TextIndexStore {
     // the stats stage flips at every update/delete — GC it here, not
     // only at compact, or tiny one-file versions accumulate per batch
     StoreVersions.gc(s, fs, idx.dir, Seq("stats"))
-    batchId.foreach(UpdateMarker.writeApplied(fs, idx.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(idx.dir))
+    UpdateMarker.exit(fs, idx.dir, batchId)
     idx
   }
 
@@ -612,7 +570,8 @@ object TextIndexStore {
     val s = ids.sparkSession
     val fs = new Path(idx.dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    if (settleEntry(s, fs, idx, batchId))
+    if (UpdateMarker.enter(s, fs, idx.dir, Stages, stageMap(s, idx),
+        batchId))
       return idx // this very batch already applied — no-op
     val snap = idx.pin(s)
     // only CURRENTLY-LIVE ids count: doclens(s) is the masked view,
@@ -646,8 +605,7 @@ object TextIndexStore {
     StoreVersions.flip(fs, idx.dir, Map("stats" -> sV),
       AppendSnap) // THE commit
     StoreVersions.gc(s, fs, idx.dir, Seq("stats"))
-    batchId.foreach(UpdateMarker.writeApplied(fs, idx.dir, _))
-    UpdateMarker.delete(fs, UpdateMarker.markerPath(idx.dir))
+    UpdateMarker.exit(fs, idx.dir, batchId)
     idx
   }
 
@@ -664,23 +622,16 @@ object TextIndexStore {
     * in-place protocol closed with a per-file `fold` listing) or
     * rewritten stages with stale tombstones. A crash before the
     * flip leaves the old snapshot serving and orphans for the next
-    * entry's sweep; after it, only the `.swap` maintenance marker
-    * remains, settled without data-file healing (the
-    * [[UpdateMarker.settle]] decision table).
+    * entry's sweep; after it, only the maintenance marker remains,
+    * settled without data-file healing ([[UpdateMarker.enter]]'s
+    * marker kinds).
     */
   def compact(s: SparkSession, idx: Index): Index = {
     val fs = new Path(idx.dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    settleEntry(s, fs, idx, batchId = None)
-    val marker = UpdateMarker.markerPath(idx.dir)
-    // settle leaves a held UPDATE-shaped marker; this run's marker
-    // must be the MAINTENANCE kind (a crash of ours must never be
-    // settled by data-file healing) — swap it for the .swap form.
-    UpdateMarker.delete(fs, marker)
+    UpdateMarker.enter(s, fs, idx.dir, Stages, stageMap(s, idx),
+      batchId = None, maintenance = true)
     val snap = idx.pin(s)
-    UpdateMarker.write(fs, marker, UpdateMarker.State("", Map(
-      "postings.swap" -> UpdateMarker.listFiles(fs, snap.postingsPath),
-      "doclens.swap" -> UpdateMarker.listFiles(fs, snap.doclensPath))))
     // the rewrites below read the MASKED views, so tombstoned docs'
     // removal becomes physical here; the delta folds into the base
     val pV = StoreVersions.next(fs, idx.dir, "postings")
@@ -727,7 +678,7 @@ object TextIndexStore {
       registerBucketedTable(s, tableNameFor(idx.dir), pV,
         idx.postingsBuckets)
     StoreVersions.gc(s, fs, idx.dir, Stages)
-    UpdateMarker.delete(fs, marker)
+    UpdateMarker.exit(fs, idx.dir)
     idx
   }
 
@@ -737,23 +688,17 @@ object TextIndexStore {
     * since are DELETED surgically off the snapshot's file manifest
     * (the epoch's own rows untouched) — after it the store equals
     * the epoch stage-for-stage, and serves so (spec-pinned against
-    * the pre-batch scores). Enters as a WRITER (settle + marker,
-    * single-writer collision applies), clears `_applied` (an undone
-    * batch id must fold again — the rollback re-opens it), and
-    * re-registers the bucketed table at the restored version.
+    * the pre-batch scores). Enters as a WRITER
+    * ([[UpdateMarker.rollback]]: single-writer collision applies,
+    * `_applied` clears so an undone batch id folds again).
     * Destructive to the undone epochs by design; retention bounds
     * how far back `seq` can reach.
     */
   def rollback(s: SparkSession, idx: Index, seq: Int): Index = {
     val fs = new Path(idx.dir)
       .getFileSystem(s.sessionState.newHadoopConf())
-    settleEntry(s, fs, idx, batchId = None)
-    StoreVersions.rollbackTo(fs, idx.dir, seq, AppendSnap)
-    // deliberately NO gc here: the target snapshot must survive so a
-    // crashed coordinator's RE-RUN of the same rollback converges
-    // (readAt would otherwise be pruned by this very flip's retention
-    // bound); the next normal writer's entry prunes as usual
-    UpdateMarker.clear(fs, idx.dir)
+    UpdateMarker.rollback(s, fs, idx.dir, Stages, stageMap(s, idx), seq,
+      AppendSnap)
     idx
   }
 
@@ -800,7 +745,7 @@ object TextIndexStore {
     * idf aggregate still reads just the probed terms' row groups
     * (token pushdown binds before the mask). AQE picks the
     * semi-join's build side; a forced broadcast would OOM on a
-    * corpus-scale allow-list (the [[TombBroadcastMaxBytes]] lesson).
+    * corpus-scale allow-list (the [[Tombstones.BroadcastMaxBytes]] lesson).
     */
   def bm25Filtered(s: SparkSession, idx: Index, terms: Seq[String],
       allowed: DataFrame, k1: Double = 1.2, b: Double = 0.75)

@@ -8,14 +8,24 @@ import org.apache.spark.sql.functions._
   * persisted stores share ([[CurationStore]], [[AnnIndexStore]],
   * [[TextIndexStore]]): the stage probe, the broadcast-or-shuffle
   * size decision, and the masking anti-join. Centralized for the
-  * same reason [[UpdateMarker.settle]] is — the protocol must not
-  * fork per store (the round-14 review found exactly that drift:
-  * one store restricted deletes to live ids while the other two
-  * tombstoned never-stored ids). Each store keeps only what is
-  * genuinely its own: the tombstone directory layout, its conf key,
-  * and WHICH columns of which stages mask.
+  * same reason the [[UpdateMarker]] writer lifecycle is — the
+  * protocol must not fork per store (the round-14 review found
+  * exactly that drift: one store restricted deletes to live ids
+  * while the other two tombstoned never-stored ids). Each store
+  * keeps only what is genuinely its own: the tombstone directory
+  * layout and WHICH columns of which stages mask.
   */
 private[ops] object Tombstones {
+
+  /** Ceiling (bytes of tombstone parquet) up to which every store's
+    * deleted-id mask rides reads as a BROADCAST; past it the mask
+    * degrades to a shuffle anti-join instead of OOMing. Hitting it
+    * means the store's compact() is overdue. */
+  val BroadcastMaxBytes = "spark.graft.store.tombBroadcastMaxBytes"
+  private val broadcastDefault = 32L * 1024 * 1024
+
+  def broadcastMaxBytes(s: SparkSession): Long =
+    s.conf.get(BroadcastMaxBytes, broadcastDefault.toString).toLong
 
   /** Where a read's tombstone set comes from: the LIVE stage
     * directory (listed at read time — every current-pin read), or a
@@ -47,9 +57,6 @@ private[ops] object Tombstones {
     else Some(s.read.parquet(files.map(_._1): _*))
   }
 
-  def ifAny(s: SparkSession, tombDir: String): Option[DataFrame] =
-    ifAny(s, Live(tombDir))
-
   /** Broadcast-or-shuffle decision by ON-DISK tombstone bytes (a
     * file-listing read — or the pinned listing — no job): below the
     * ceiling the deleted-id mask rides reads as a broadcast; past it
@@ -57,14 +64,8 @@ private[ops] object Tombstones {
     * the degrade-don't-OOM rule. Hitting the ceiling means compact()
     * is overdue (compaction makes removals physical and empties the
     * set). */
-  def broadcastable(s: SparkSession, src: Src,
-      confKey: String, defaultBytes: Long): Boolean =
-    listing(s, src).map(_._2).sum <=
-      s.conf.get(confKey, defaultBytes.toString).toLong
-
-  def broadcastable(s: SparkSession, tombDir: String,
-      confKey: String, defaultBytes: Long): Boolean =
-    broadcastable(s, Live(tombDir), confKey, defaultBytes)
+  private def broadcastable(s: SparkSession, src: Src): Boolean =
+    listing(s, src).map(_._2).sum <= broadcastMaxBytes(s)
 
   /** Drop tombstoned ids' rows from a stage view, matching the
     * store's `idCol` against each of `onCols` in turn (a pairs stage
@@ -75,22 +76,16 @@ private[ops] object Tombstones {
     * partition/bucket pruning on the stage still bind.
     */
   def mask(s: SparkSession, df: DataFrame, idCol: String,
-      src: Src, confKey: String, defaultBytes: Long,
-      onCols: Seq[String]): DataFrame =
+      src: Src, onCols: Seq[String]): DataFrame =
     ifAny(s, src) match {
       case None => df
       case Some(t) =>
         val ids = t.select(col(idCol)).distinct()
-        val bc = broadcastable(s, src, confKey, defaultBytes)
+        val bc = broadcastable(s, src)
         val masked = onCols.foldLeft(df) { (acc, c) =>
           val rhs = ids.select(col(idCol).as(c))
           acc.join(if (bc) broadcast(rhs) else rhs, Seq(c), "left_anti")
         }
         masked.select(df.columns.map(col).toIndexedSeq: _*)
     }
-
-  def mask(s: SparkSession, df: DataFrame, idCol: String,
-      tombDir: String, confKey: String, defaultBytes: Long,
-      onCols: Seq[String]): DataFrame =
-    mask(s, df, idCol, Live(tombDir), confKey, defaultBytes, onCols)
 }

@@ -1,25 +1,35 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
-/** Tiny in-flight marker making a store update's RE-RUN safe across
-  * every crash window, including the one [[StageSwap]] alone cannot
-  * close: a crash AFTER the swap committed but BEFORE the caller saw
-  * success. The protocol (used by [[StatsStore.update]] and
-  * [[CurationStore.update]]):
+/** The store WRITER LIFECYCLE — the one definition of the crash and
+  * replay protocol every marker-holding store ([[CurationStore]],
+  * [[AnnIndexStore]], [[TextIndexStore]], [[StatsStore]]) runs, so it
+  * cannot drift between stores. Every commit is a [[StoreVersions]]
+  * manifest flip; each writer is exactly
   *
-  *  1. entry — if a marker exists, the previous update crashed.
-  *     Decide whether it committed by comparing the COMMIT STAGE's
-  *     current file listing against the listing snapshotted in the
-  *     marker (a swap always replaces the stage's part files, and a
-  *     [[StageSwap.recover]] rollback restores the original names —
-  *     so listing-equality ⇔ not committed). Uncommitted: the
-  *     caller deletes any partial side-stage appends (files not in
-  *     the snapshot) and proceeds. Committed with the SAME batchId
-  *     as this call: the batch is already applied — return without
-  *     touching the store.
-  *  2. write the marker (batchId + pre-update listings), run the
-  *     update, commit via [[StageSwap.swapIn]], delete the marker.
+  *  1. [[enter]] — sweep crashed writers' orphan version dirs, then
+  *     settle a crashed predecessor's in-flight marker ([[settle]]),
+  *     run the replay check and write this writer's fresh marker;
+  *  2. the body — appends land INSIDE current version dirs (the
+  *     store's append stages), replaced stages are staged as next
+  *     versions, and ONE flip commits them together with the
+  *     one-row `stats` counter version;
+  *  3. [[exit]] — record `batchId` in `_applied`, then delete the
+  *     marker.
+  *
+  * [[rollback]] and [[enterBuild]] are the two other entries (undo
+  * to a snapshot; a full rebuild of the directory).
+  *
+  * Commitment of a crashed UPDATE is decided by the `stats` stage:
+  * every update/delete flips it, and a flipped stage resolves to a
+  * DIFFERENT version directory, so its listing differs from the one
+  * snapshotted in the marker — listing-equality ⇔ not committed.
+  * Uncommitted: the partial appends (files beyond the snapshot) are
+  * deleted and the re-run is exactly-once by redo. Committed with
+  * the SAME batchId as this call: the batch is already applied —
+  * the writer returns without touching the store.
   *
   * `batchId` is the caller's idempotence key (a date, an offset
   * range, a manifest hash — non-empty when defined; the empty string
@@ -43,8 +53,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * and overwrites the record at its own commit.
   *
   * SINGLE WRITER: the whole protocol assumes at most one in-flight
-  * update per store directory — two concurrent updaters would race
-  * on the marker and the stage swap and corrupt the snapshot
+  * writer per store directory — two concurrent writers would race
+  * on the marker and the appends and corrupt the snapshot
   * discipline. [[write]] guards it cheaply: the marker is created
   * with the fail-if-exists flag, so the second concurrent updater
   * errors loudly at entry instead of silently interleaving.
@@ -59,8 +69,26 @@ object UpdateMarker {
   final case class State(batchId: String,
       listings: Map[String, Set[String]])
 
+  /** The marker stage whose listing witnesses an update's commit: the
+    * one-row counter every store flips at each batch commit. */
+  private val CommitStage = "stats"
+
+  /** Listing-key suffix of a MAINTENANCE writer's marker. */
+  private val MaintenanceSuffix = ".swap"
+
   def markerPath(storeDir: String): Path =
     new Path(s"$storeDir/_inflight")
+
+  /** Rename that FAILS LOUDLY: Hadoop `FileSystem.rename` reports most
+    * failures (dest exists, permissions, cross-fs moves) by returning
+    * FALSE, not throwing — a caller that ignored it would carry on as
+    * if the move had happened. */
+  private[ops] def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    require(fs.rename(from, to), s"rename $from -> $to failed")
+
+  /** Recursive delete that fails loudly unless `p` is gone after it. */
+  private[ops] def remove(fs: FileSystem, p: Path): Unit =
+    require(fs.delete(p, true) || !fs.exists(p), s"delete $p failed")
 
   /** All committed data files of a stage directory (top level). */
   def listFiles(fs: FileSystem, dir: String): Set[String] = {
@@ -89,33 +117,99 @@ object UpdateMarker {
     out.toSet
   }
 
-  /** ONE definition of the entry-point settlement both stores run —
-    * the whole pre-update protocol (heal the commit stage, settle a
-    * crashed predecessor's marker, durable `_applied` replay check,
-    * fresh marker write) in a single place, because its correctness
-    * depends on [[StatsStore.update]] and [[CurationStore.update]]
-    * staying in exact lockstep (this file's `_applied` record had to
-    * be patched into both in parallel once already).
+  /** Writer ENTRY — every store writer's first step, before it reads
+    * anything it will fold: drop the version dirs of writers that
+    * died before their flip (`versioned`: the store's manifest
+    * stages — flip-last means nothing else of theirs can exist), then
+    * [[settle]]. `stages` maps marker stage names to their RESOLVED
+    * current version dirs: `stats` plus the append stages a crash
+    * can leave partial files in; `recursiveStages` names the
+    * partitioned ones.
     *
-    * `stages` maps marker stage names to their directories;
-    * `commitStage` names the one whose listing decides commitment
-    * (the stage the update's [[StageSwap.swapIn]] replaces); the
-    * remaining stages are append-only sides whose partial files from
-    * an uncommitted crash are dropped. Returns TRUE when `batchId`
-    * is already applied — the caller must return its store untouched
-    * — and FALSE when a fresh marker has been written and the update
-    * should proceed.
+    * `maintenance` selects this writer's marker kind. An UPDATE
+    * (append inside current versions, flip `stats`) writes the plain
+    * kind, whose crash heals partial appends. A MAINTENANCE writer
+    * (compact, rollback: output only in fresh version dirs or
+    * deletions, never appends) writes the `.swap` kind, which
+    * settlement never heals by file deletion — after such a writer's
+    * committed flip every resolved stage may hold files its snapshot
+    * never saw, and deleting them would destroy live data.
+    *
+    * Returns TRUE when `batchId` is already applied — the caller
+    * must return its store untouched — and FALSE when a fresh marker
+    * has been written and the body should proceed.
     */
-  def settle(spark: org.apache.spark.sql.SparkSession, fs: FileSystem,
-      storeDir: String, commitStage: String,
-      stages: Map[String, String], batchId: Option[String],
+  def enter(spark: SparkSession, fs: FileSystem, storeDir: String,
+      versioned: Seq[String], stages: Map[String, String],
+      batchId: Option[String], maintenance: Boolean = false,
+      recursiveStages: Set[String] = Set.empty): Boolean = {
+    require(!maintenance || batchId.isEmpty,
+      "a maintenance writer takes no batchId")
+    StoreVersions.sweepOrphans(fs, storeDir, versioned)
+    settle(spark, fs, storeDir, stages, batchId, maintenance,
+      recursiveStages)
+  }
+
+  /** Writer EXIT — after the flip that commits the body: record the
+    * committed batch BEFORE dropping the in-flight marker, so at
+    * every instant one of the two files names it. */
+  def exit(fs: FileSystem, storeDir: String,
+      batchId: Option[String] = None): Unit = {
+    batchId.foreach(writeApplied(fs, storeDir, _))
+    remove(fs, markerPath(storeDir))
+  }
+
+  /** ROLLBACK entry-to-exit ([[StoreVersions.rollbackTo]]): enter as a
+    * maintenance writer (the flip back may resolve every stage to a
+    * version its snapshot never listed), roll back, then drop both
+    * protocol files — `_applied` too, so an undone batch id folds
+    * again. The clear runs LAST: a crash before it leaves `_applied`
+    * naming an already-undone batch, and the recovery is to RE-RUN
+    * the rollback to completion (see [[StoreVersions.rollbackTo]]).
+    * No GC: the target snapshot must survive so that re-run
+    * converges; the next normal writer prunes.
+    */
+  def rollback(spark: SparkSession, fs: FileSystem, storeDir: String,
+      versioned: Seq[String], stages: Map[String, String], seq: Int,
+      appendStages: Map[String, Boolean],
+      recursiveStages: Set[String] = Set.empty): Unit = {
+    enter(spark, fs, storeDir, versioned, stages, batchId = None,
+      maintenance = true, recursiveStages = recursiveStages)
+    StoreVersions.rollbackTo(fs, storeDir, seq, appendStages)
+    clear(fs, storeDir)
+  }
+
+  /** BUILD entry — settle the directory's previous life before a
+    * full build writes a fresh snapshot. A VERSIONED previous life
+    * keeps its committed snapshot (readers serve THROUGH the
+    * rebuild) and only sheds orphan version dirs; a PRE-VERSIONING or
+    * foreign layout (stage data directly at the stage roots, with
+    * its `.next`/`.old` staging siblings) is reset wholesale — its
+    * files would alias version resolution. The protocol files clear
+    * either way: a rebuild resets batch-id lineage (streaming epochs
+    * restart at 0), and a crashed writer's marker would "heal" fresh
+    * files against a stale snapshot.
+    */
+  def enterBuild(fs: FileSystem, storeDir: String,
+      versioned: Seq[String]): Unit = {
+    if (StoreVersions.read(fs, storeDir).isEmpty)
+      for (st <- versioned; sfx <- Seq("", ".next", ".old"))
+        remove(fs, new Path(s"$storeDir/$st$sfx"))
+    else StoreVersions.sweepOrphans(fs, storeDir, versioned)
+    clear(fs, storeDir)
+  }
+
+  /** Settle a crashed predecessor's marker, run the replay check and
+    * write this writer's fresh marker — the body of [[enter]].
+    * Returns TRUE when `batchId` is already applied.
+    */
+  private[ops] def settle(spark: SparkSession, fs: FileSystem,
+      storeDir: String, stages: Map[String, String],
+      batchId: Option[String], maintenance: Boolean = false,
       recursiveStages: Set[String] = Set.empty): Boolean = {
     require(batchId.forall(_.nonEmpty),
       "batchId, when defined, must be non-empty (the empty string is " +
         "the marker's encoding of 'no idempotence key')")
-    // a prior update may have died inside its commit swap — heal the
-    // stage before reading it, or the listings below see a half-swap
-    StageSwap.recover(spark, stages(commitStage))
     val marker = markerPath(storeDir)
     // stages named in `recursiveStages` are PARTITIONED append
     // targets: their snapshot and heal must list recursively or the
@@ -124,41 +218,35 @@ object UpdateMarker {
       if (recursiveStages(stage)) listFilesRecursive(fs, dir)
       else listFiles(fs, dir)
     val sameBatchApplied = read(fs, marker).map { prior =>
-      // rollback restored the snapshotted names, a committed swap
-      // replaced them — listing equality decides commitment. The
-      // durable `_applied` record is an INDEPENDENT commit witness
-      // (written only after the swap): it covers the one shape
-      // listing equality cannot — a commit stage whose swap replaced
-      // zero parquet files (e.g. a bucketed store's empty label
-      // delta), where healing the side-stage appends of a batch that
-      // DID commit would throw its rows away while reporting the
-      // batch applied.
-      val committed = files(commitStage, stages(commitStage)) !=
-          prior.listings.getOrElse(commitStage, Set.empty[String]) ||
+      // a flipped commit stage resolves to a new version dir, so
+      // listing equality decides commitment. The durable `_applied`
+      // record is an INDEPENDENT commit witness (written only after
+      // the flip): it covers a commit stage whose listing did not
+      // change, where healing the append stages of a batch that DID
+      // commit would throw its rows away while reporting the batch
+      // applied.
+      val committed = files(CommitStage, stages(CommitStage)) !=
+          prior.listings.getOrElse(CommitStage, Set.empty[String]) ||
         (prior.batchId.nonEmpty &&
           readApplied(fs, storeDir).contains(prior.batchId))
-      // a MAINTENANCE writer's marker (listings keyed `<stage>.swap`
-      // — a compact): its rewrites commit through [[StageSwap]] on
-      // stages the commit-stage listing does not witness, and its
-      // partial output lives at `.next`, never inside a stage — so
-      // settlement must NEVER heal stage files for it (after a
-      // committed stage swap with a crashed marker delete, the
-      // listing diff IS the new live data). The [[settleAppend]]
-      // decision table, applied to the swap-commit protocol.
-      val maintenance = prior.listings.keys.exists(_.endsWith(".swap"))
-      if (!committed && !maintenance) {
-        // crashed before the commit: drop the partial side-stage
-        // appends so the re-run's before/after diffs start clean
-        (stages - commitStage).foreach { case (name, dir) =>
+      // a MAINTENANCE writer's marker is never healed by deleting
+      // stage files: after its committed flip with a crashed marker
+      // delete, the listing diff IS the new live data
+      val wasMaintenance =
+        prior.listings.keys.exists(_.endsWith(MaintenanceSuffix))
+      if (!committed && !wasMaintenance) {
+        // crashed before the commit: drop the partial appends so the
+        // re-run's before/after diffs start clean
+        (stages - CommitStage).foreach { case (name, dir) =>
           (files(name, dir) -- prior.listings.getOrElse(name,
               Set.empty[String]))
-            .foreach(f => StageSwap.remove(fs, new Path(f)))
+            .foreach(f => remove(fs, new Path(f)))
           spark.catalog.refreshByPath(dir)
         }
       }
       if (committed && prior.batchId.nonEmpty)
         writeApplied(fs, storeDir, prior.batchId)
-      delete(fs, marker)
+      remove(fs, marker)
       committed && batchId.isDefined && prior.batchId == batchId.get
     }.getOrElse(false)
     // the durable applied record catches the replay a deleted marker
@@ -167,76 +255,10 @@ object UpdateMarker {
         (batchId.isDefined && readApplied(fs, storeDir) == batchId))
       return true
     write(fs, marker, State(batchId.getOrElse(""),
-      stages.map { case (n, d) => n -> files(n, d) }))
+      stages.map { case (n, d) =>
+        (if (maintenance) n + MaintenanceSuffix else n) -> files(n, d)
+      }))
     false
-  }
-
-  /** Entry-point settlement for an APPEND-COMMIT store stage (the
-    * [[AnnIndexStore]] protocol) — the dual of [[settle]]'s
-    * swap-commit detection, centralized HERE for the same reason
-    * settle is: the decision table below is correctness-critical and
-    * must not fork per store.
-    *
-    * A swap writer's commitment is visible as listing INEQUALITY on
-    * its commit stage; an append writer's is NOT (a partial append
-    * and a committed one both change the listing), so an append's
-    * commitment is witnessed only by the durable `_applied` record
-    * written before its marker delete. Decision per crashed marker:
-    *
-    *  - marker stage `"$stage.swap"` (a MAINTENANCE writer, e.g.
-    *    compact): its partial output lives at `$stage.next`, never
-    *    inside the stage, and [[StageSwap.recover]] (which the
-    *    caller MUST run before this) already healed it — whether the
-    *    swap committed or rolled back, the stage's files are all
-    *    live data. Settlement only drops the marker; it NEVER
-    *    deletes stage files for this kind. (Deciding "committed vs
-    *    not" by listing equality and healing the diff — the [[settle]]
-    *    rule — would delete the entire freshly-compacted stage after
-    *    a committed swap whose writer died before its marker delete.)
-    *  - marker stage `stage` (an APPEND writer): `_applied` naming
-    *    its batch means the append finished; otherwise heal — drop
-    *    the files beyond the snapshot so the re-run is exactly-once
-    *    by redo.
-    *
-    * `stages` maps each append stage the store's writers touch to its
-    * (listing, healed) pair: `listing` must enumerate the stage's
-    * data files RECURSIVELY when the stage is partitioned (the append
-    * store's layout); `healed` runs after files are dropped (cache
-    * invalidation). EVERY writer of the store must snapshot EVERY
-    * stage in its marker (an untouched stage snapshots as its current
-    * listing — the heal diff is then empty by construction), because
-    * settlement heals each stage against the crashed marker's
-    * snapshot for that stage: a missing key reads as an empty
-    * snapshot and the heal would delete the whole stage. Returns TRUE
-    * when `batchId` is already applied — the caller returns its
-    * store untouched WITHOUT writing a fresh marker; FALSE when the
-    * caller should write its own marker ([[write]]'s fail-if-exists
-    * guard stays its concurrency backstop) and proceed.
-    */
-  def settleAppend(fs: FileSystem, storeDir: String,
-      stages: Map[String, (() => Set[String], () => Unit)],
-      batchId: Option[String]): Boolean = {
-    require(batchId.forall(_.nonEmpty),
-      "batchId, when defined, must be non-empty (the empty string is " +
-        "the marker's encoding of 'no idempotence key')")
-    val marker = markerPath(storeDir)
-    read(fs, marker).foreach { prior =>
-      val committed = prior.batchId.nonEmpty &&
-        readApplied(fs, storeDir).contains(prior.batchId)
-      val maintenance = prior.listings.keys.exists(_.endsWith(".swap"))
-      if (!committed && !maintenance) {
-        stages.foreach { case (stage, (listing, healed)) =>
-          val beyond =
-            listing() -- prior.listings.getOrElse(stage, Set.empty)
-          if (beyond.nonEmpty) {
-            beyond.foreach(f => StageSwap.remove(fs, new Path(f)))
-            healed()
-          }
-        }
-      }
-      delete(fs, marker)
-    }
-    batchId.isDefined && readApplied(fs, storeDir) == batchId
   }
 
   /** Write the in-flight marker, FAILING if one already exists — the
@@ -265,7 +287,7 @@ object UpdateMarker {
     // check-then-act: two concurrent writers both passing an
     // fs.exists() check would write the same tmp and both rename
     // successfully on a local filesystem (POSIX rename overwrites),
-    // silently interleaving their appends and swaps. createNewFile
+    // silently interleaving their appends and flips. createNewFile
     // is the atomic create-if-absent primitive on HDFS and local.
     if (!fs.createNewFile(marker))
       throw new IllegalStateException(
@@ -339,7 +361,7 @@ object UpdateMarker {
             "is younger than the claim grace period — a live writer " +
             "may be mid-claim (retry after it ages out, or serialize " +
             "updates per store directory)")
-      StageSwap.remove(fs, marker)
+      remove(fs, marker)
       return None
     }
     val in = fs.open(marker)
@@ -369,14 +391,11 @@ object UpdateMarker {
     Some(State(id, listings))
   }
 
-  def delete(fs: FileSystem, marker: Path): Unit =
-    StageSwap.remove(fs, marker)
-
   def appliedPath(storeDir: String): Path =
     new Path(s"$storeDir/_applied")
 
-  /** Durably record `batchId` as committed — called after the stage
-    * swap's commit, BEFORE the in-flight marker is deleted, so at
+  /** Durably record `batchId` as committed — called after the
+    * commit flip, BEFORE the in-flight marker is deleted, so at
     * every instant at least one of the two files names the committed
     * batch (see the replay-window note in the object scaladoc).
     * Overwrite is correct here: the record is a single most-recent
@@ -390,7 +409,7 @@ object UpdateMarker {
     * "uncommitted" — partial appends healed, batch re-run
     * exactly-once by redo.
     */
-  def writeApplied(fs: FileSystem, storeDir: String,
+  private[ops] def writeApplied(fs: FileSystem, storeDir: String,
       batchId: String): Unit = {
     val dst = appliedPath(storeDir)
     val tmp = new Path(dst.getParent, dst.getName + ".tmp")
@@ -404,14 +423,10 @@ object UpdateMarker {
         s"could not commit applied-batch record $dst")
   }
 
-  /** Drop both protocol files — called by the stores' [[build]]
-    * paths: a full rebuild resets the store wholesale, and a stale
-    * `_applied` id from the directory's previous life could alias a
-    * fresh producer's batch ids (streaming epochs restart at 0).
-    */
-  def clear(fs: FileSystem, storeDir: String): Unit = {
-    delete(fs, markerPath(storeDir))
-    delete(fs, appliedPath(storeDir))
+  /** Drop both protocol files ([[enterBuild]], [[rollback]]). */
+  private def clear(fs: FileSystem, storeDir: String): Unit = {
+    remove(fs, markerPath(storeDir))
+    remove(fs, appliedPath(storeDir))
   }
 
   /** The last durably-committed batchId, if any batch recorded one. */

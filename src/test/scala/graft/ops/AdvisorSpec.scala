@@ -56,19 +56,17 @@ class AdvisorSpec extends SparkSpec {
         .values.forall(_ == "ok"),
       s"tiny tombstones tripped a 32 MB ceiling: $afterDelete")
 
-    // drop the tombstone ceilings to zero: the three serving rows
+    // drop the tombstone ceiling to zero: the three serving rows
     // flip to compact — the advisor honors the same dials the
     // stores' masks degrade on
-    val keys = Seq(CurationStore.TombBroadcastMaxBytes,
-      AnnIndexStore.TombBroadcastMaxBytes,
-      TextIndexStore.TombBroadcastMaxBytes)
+    val key = Tombstones.BroadcastMaxBytes
     try {
-      keys.foreach(spark.conf.set(_, "0"))
+      spark.conf.set(key, "0")
       val tight = actions(Advisor.advise(spark, st))
       assert(Seq("curation", "ann", "text").forall(s =>
           tight((s, "tombstone_bytes")) == "compact"),
         s"zero ceiling did not advise compact everywhere: $tight")
-    } finally keys.foreach(spark.conf.unset)
+    } finally spark.conf.unset(key)
 
     // per-add file growth: an ingest appends ~one file per touched
     // cell; with the files-per-cell ceiling fabricated below 1 the
@@ -322,14 +320,12 @@ class AdvisorSpec extends SparkSpec {
     assert(st1.curation.tombstonesIfAny(spark).isDefined,
       "fixture: the un-advised tombstones should still be outstanding")
 
-    // drop the tombstone ceilings to zero: all three serving stores
+    // drop the tombstone ceiling to zero: all three serving stores
     // come due, maintain compacts them (removals physical, masks
     // clear) and the post readout is ok even at the zero ceiling
-    val keys = Seq(CurationStore.TombBroadcastMaxBytes,
-      AnnIndexStore.TombBroadcastMaxBytes,
-      TextIndexStore.TombBroadcastMaxBytes)
+    val key = Tombstones.BroadcastMaxBytes
     try {
-      keys.foreach(spark.conf.set(_, "0"))
+      spark.conf.set(key, "0")
       val pre2 = manifests(st1)
       val (st2, after2) = CorpusStore.maintain(spark, st1,
         liveCorpus = Some(live))
@@ -390,7 +386,7 @@ class AdvisorSpec extends SparkSpec {
           "embedding", k = 5).count() > 0,
         "rebuilt index does not serve")
     } finally {
-      keys.foreach(spark.conf.unset)
+      spark.conf.unset(key)
       spark.conf.unset(Advisor.RecallFloor)
     }
   }

@@ -53,13 +53,13 @@ class UpdateMarkerSpec extends SparkSpec {
     // the claim is atomic even when the first writer died BEFORE its
     // content rename: a bare zero-length claim still excludes a
     // second write()
-    UpdateMarker.delete(fs, marker)
+    UpdateMarker.remove(fs, marker)
     assert(fs.createNewFile(marker))
     val e2 = intercept[IllegalStateException] {
       UpdateMarker.write(fs, marker, state)
     }
     assert(e2.getMessage.contains("concurrent"))
-    UpdateMarker.delete(fs, marker)
+    UpdateMarker.remove(fs, marker)
   }
 
   test("a zero-length marker is a pre-mutation claim — spent safely " +
@@ -86,14 +86,21 @@ class UpdateMarkerSpec extends SparkSpec {
     age()
     assert(UpdateMarker.read(fs, marker).isEmpty)
     assert(!fs.exists(marker), "spent claim not cleared")
-    var healed = false
+    // settlement against a spent claim heals nothing: the append
+    // stage's file is beyond the (absent) snapshot, and a claim read
+    // as an empty-listing marker would delete it
+    val stages = Map("codes" -> s"$dir/codes", "stats" -> s"$dir/stats")
+    val appended = new Path(s"$dir/codes/part-0.parquet")
+    fs.create(appended, true).close()
+    fs.create(new Path(s"$dir/stats/part-0.parquet"), true).close()
     fs.create(marker, true).close()
     age()
-    UpdateMarker.settleAppend(fs, dir,
-      Map("codes" -> ((() => Set("phantom.parquet"),
-        () => { healed = true }))), None)
-    assert(!healed, "a pre-mutation claim healed stage files")
-    assert(!fs.exists(marker))
+    assert(!UpdateMarker.settle(spark, fs, dir, stages, None))
+    assert(fs.exists(appended), "a pre-mutation claim healed stage files")
+    assert(UpdateMarker.read(fs, marker).exists(_.listings("codes")
+        .contains(fs.makeQualified(appended).toString)),
+      "settle did not replace the spent claim with its own marker")
+    UpdateMarker.remove(fs, marker)
     // NON-EMPTY garbage could be a truncated real marker: fail loudly
     val out = fs.create(marker, true)
     try out.write("garbage\n".getBytes("UTF-8")) finally out.close()
@@ -102,10 +109,10 @@ class UpdateMarkerSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("corrupt"))
     intercept[IllegalStateException] {
-      UpdateMarker.settleAppend(fs, dir,
-        Map("codes" -> ((() => Set.empty[String], () => ()))), None)
+      UpdateMarker.settle(spark, fs, dir, stages, None)
     }
-    UpdateMarker.delete(fs, marker)
+    assert(fs.exists(appended), "a corrupt marker healed stage files")
+    UpdateMarker.remove(fs, marker)
   }
 
   test("writeApplied replaces the record atomically (tmp+rename; " +
@@ -118,5 +125,24 @@ class UpdateMarkerSpec extends SparkSpec {
     assert(UpdateMarker.readApplied(fs, dir).contains("batch-2"))
     assert(!fs.exists(new Path(s"$dir/_applied.tmp")),
       "tmp file left behind")
+  }
+
+  test("a failed rename is loud, not silent") {
+    // Hadoop's FileSystem.rename reports many failures by returning
+    // FALSE rather than throwing (dest exists as a file is the
+    // deterministic local-fs case); the checked wrapper must turn
+    // that into a throw and leave the source where it was
+    val dir = s"$tmp/d"
+    val src = new Path(s"$dir/stage")
+    fs.mkdirs(src)
+    fs.create(new Path(src, "part-0.parquet"), true).close()
+    val dest = new Path(s"$dir/dest")
+    fs.create(dest, true).close() // plain file occupies the destination
+    val e = intercept[IllegalArgumentException] {
+      UpdateMarker.rename(fs, src, dest)
+    }
+    assert(e.getMessage.contains("rename"))
+    assert(fs.exists(new Path(src, "part-0.parquet")),
+      "failed rename must not move data")
   }
 }
